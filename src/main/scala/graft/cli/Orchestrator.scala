@@ -13,10 +13,19 @@ package graft.cli
   * as the reference's DAG body is separable from its `schedule`
   * field. No new daemon, no external dependency.
   *
-  * Tasks run sequentially in dependency order: pipeline stages already
-  * saturate the cluster internally (every stage is a distributed job),
-  * so intra-DAG task parallelism would only contend for executors —
-  * same reasoning as the reference's linear Airflow chain.
+  * Tasks run sequentially in dependency order. At monthly-batch table
+  * sizes a stage does NOT saturate the cluster: the cold monthly DAG
+  * runs ~270 short jobs and keeps its executor threads busy only ~30%
+  * of the wall time, the rest being driver-side planning, listing and
+  * commits. The overlap that recovers that idle time lives INSIDE the
+  * tasks, where the independent actions are known: `core.Concurrent`
+  * runs gold's five dim writes and three mart writes, the incremental
+  * fold's mart refreshes, export's three CSV writes and validate's
+  * suites concurrently. `runDag` itself stays sequential for two
+  * reasons: per-task retries keep their simple semantics (a retry
+  * never overlaps another task's writes), and callers that wrap each
+  * `TaskDef.run` in a span on a shared, non-thread-safe stack — a
+  * tracer setting the job group, say — keep correct nesting.
   */
 object Orchestrator {
 

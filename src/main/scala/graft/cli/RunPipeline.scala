@@ -1,7 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.{GraftSession, ParquetTable}
+import graft.core.{Concurrent, GraftSession, ParquetTable}
 import graft.pipeline._
 import graft.quality.Expectations
 
@@ -48,45 +48,31 @@ object RunPipeline {
 
   def runGold(spark: SparkSession, wh: String, gate: Gate = noGate): Unit = {
     val silver = ParquetTable.read(spark, s"$wh/silver/flights")
-    val dimDate = GoldDims.dimDate(spark)
-    val dimTime = GoldDims.dimTime(spark)
-    val dimAirline = GoldDims.dimAirline(silver)
-    val dimAirport = GoldDims.dimAirport(silver)
-    val dimRoute = GoldDims.dimRoute(silver)
-    Seq("dim_date" -> dimDate, "dim_time" -> dimTime,
-      "dim_airline" -> dimAirline, "dim_airport" -> dimAirport,
-      "dim_route" -> dimRoute).foreach { case (n, d) =>
-      ParquetTable.write(d, s"$wh/gold/$n")
-    }
-    gate(dimDate, graft.quality.FlightSuites.dimDate, "dim_date")
-    gate(dimTime, graft.quality.FlightSuites.dimTime, "dim_time")
-    gate(dimAirport, graft.quality.FlightSuites.dimAirport, "dim_airport")
-    gate(dimRoute, graft.quality.FlightSuites.dimRoute, "dim_route")
+    val dims = GoldDims.writeAll(spark, silver, wh)
+    gate(dims.date, graft.quality.FlightSuites.dimDate, "dim_date")
+    gate(dims.time, graft.quality.FlightSuites.dimTime, "dim_time")
+    gate(dims.airport, graft.quality.FlightSuites.dimAirport, "dim_airport")
+    gate(dims.route, graft.quality.FlightSuites.dimRoute, "dim_route")
 
-    val fact = FactFlights.build(silver, dimDate, dimAirport, dimAirline, dimRoute)
+    val fact = FactFlights.build(silver, dims.date, dims.airport,
+      dims.airline, dims.route)
     gate(fact, graft.quality.FlightSuites.factFlights, "fact_flights")
     ParquetTable.write(
       fact.repartition(fact("DATE_KEY")), s"$wh/gold/fact_flights",
       Seq("DATE_KEY"))
 
     val factR = ParquetTable.read(spark, s"$wh/gold/fact_flights")
-    ParquetTable.write(
-      Marts.dailyAirlinePerformance(factR, dimDate, dimAirline),
-      s"$wh/gold/daily_airline_performance", Seq("YEAR", "MONTH"))
-    ParquetTable.write(
-      Marts.dailyAirportPerformance(factR, dimDate, dimAirport),
-      s"$wh/gold/daily_airport_performance", Seq("FLIGHT_DATE"))
-    ParquetTable.write(
-      Marts.routePerformance(factR, dimDate, dimRoute, dimAirline),
-      s"$wh/gold/route_performance", Seq("YEAR", "MONTH"))
+    Concurrent.all(Marts.all(factR, dims).map { case (n, mart, parts) =>
+      () => ParquetTable.write(mart, s"$wh/gold/$n", parts)
+    })
   }
 
   def runExport(spark: SparkSession, wh: String): Unit =
-    Seq("daily_airline_performance", "daily_airport_performance",
-      "route_performance").foreach { mart =>
+    Concurrent.all(Seq("daily_airline_performance", "daily_airport_performance",
+      "route_performance").map { mart => () =>
       ParquetTable.exportCsv(
         ParquetTable.read(spark, s"$wh/gold/$mart"), s"$wh/export/$mart")
-    }
+    })
 
   def main(args: Array[String]): Unit = {
     if (args.length < 5) {

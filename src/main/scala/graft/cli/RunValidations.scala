@@ -1,7 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import graft.core.{GraftSession, ParquetTable}
+import graft.core.{Concurrent, GraftSession, ParquetTable}
 import graft.quality.{Expectations, FlightSuites}
 import graft.quality.Expectations.ValidationReport
 
@@ -13,11 +13,13 @@ import graft.quality.Expectations.ValidationReport
   *
   *   spark-submit --class graft.cli.RunValidations <jar> <warehouseDir>
   *
-  * Each suite is ONE aggregation pass over its table (see
-  * quality.Expectations), so the whole sweep costs one scan per layer.
-  * A missing table is reported and counts as a failure — a monthly
-  * operator should notice a half-built warehouse, not validate around
-  * it.
+  * Each suite's data checks compile into one aggregation query over
+  * its table (see quality.Expectations for what that query costs in
+  * Spark jobs). The suites are independent, so they run concurrently
+  * (`core.Concurrent`): the sweep's wall time is set by the slowest
+  * suite plus contention, not by their sum. A missing table is
+  * reported and counts as a failure — a monthly operator should notice
+  * a half-built warehouse, not validate around it.
   */
 object RunValidations {
 
@@ -42,15 +44,19 @@ object RunValidations {
       "corpus/documents" -> graft.quality.CorpusSuites.documents,
       "corpus/embeddings" -> graft.quality.CorpusSuites.embeddings())
       .filter { case (table, _) =>
-        new java.io.File(s"$wh/$table").isDirectory
+        // the warehouse's own filesystem, so a URI warehouse (file://,
+        // hdfs://, s3a://) finds its corpus tables too
+        val path = new org.apache.hadoop.fs.Path(s"$wh/$table")
+        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.exists(path) && fs.getFileStatus(path).isDirectory
       }
-    (suites ++ corpusSuites).map { case (table, suite) =>
+    Concurrent.all((suites ++ corpusSuites).map { case (table, suite) => () =>
       val report =
         try Some(Expectations.validate(
           ParquetTable.read(spark, s"$wh/$table"), suite))
         catch { case _: org.apache.spark.sql.AnalysisException => None }
       table -> report
-    }
+    })
   }
 
   /** True iff every layer exists and every check passed. */

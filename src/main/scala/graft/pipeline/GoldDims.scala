@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.core.{Concurrent, ParquetTable}
 
 /** Gold star-schema dimensions (SURVEY.md §2 G1/G2/A1/A2/U1).
   *
@@ -11,6 +12,29 @@ import org.apache.spark.sql.types.DecimalType
   * clock is injectable for deterministic tests.
   */
 object GoldDims {
+
+  /** The five dims of one warehouse, as read back from `gold/dim_*`. */
+  final case class Tables(date: DataFrame, time: DataFrame,
+      airline: DataFrame, airport: DataFrame, route: DataFrame)
+
+  /** Build every dim, overwrite `gold/dim_*` with the five writes
+    * running concurrently, and return the WRITTEN tables. Callers join
+    * the fact and marts against these, so each silver-derived dim is
+    * computed once per run: a lazy builder above re-derives its dim
+    * from silver at every join the dim feeds.
+    */
+  def writeAll(spark: SparkSession, silver: DataFrame, wh: String): Tables = {
+    val names = Seq("dim_date", "dim_time", "dim_airline", "dim_airport",
+      "dim_route")
+    val built = Seq(dimDate(spark), dimTime(spark), dimAirline(silver),
+      dimAirport(silver), dimRoute(silver))
+    Concurrent.all(names.zip(built).map { case (n, d) =>
+      () => ParquetTable.write(d, s"$wh/gold/$n")
+    })
+    val Seq(date, time, airline, airport, route) =
+      names.map(n => ParquetTable.read(spark, s"$wh/gold/$n"))
+    Tables(date, time, airline, airport, route)
+  }
 
   /** dim_date: G1 date spine 2020-01-01..2030-12-31 (4,018 rows),
     * DATE_KEY = yyyyMMdd int (dimensions/dim_date.py:8-33).

@@ -23,6 +23,18 @@ import org.apache.spark.sql.functions._
   */
 object Marts {
 
+  /** Every mart over `fact` as (table name, rows, partition columns) —
+    * the one list the full build and the incremental refresh write.
+    */
+  def all(fact: DataFrame, dims: GoldDims.Tables)
+      : Seq[(String, DataFrame, Seq[String])] = Seq(
+    ("daily_airline_performance",
+      dailyAirlinePerformance(fact, dims.date, dims.airline), Seq("YEAR", "MONTH")),
+    ("daily_airport_performance",
+      dailyAirportPerformance(fact, dims.date, dims.airport), Seq("FLIGHT_DATE")),
+    ("route_performance",
+      routePerformance(fact, dims.date, dims.route, dims.airline), Seq("YEAR", "MONTH")))
+
   /** A3/A4 + J9 (aggregates/daily_airline_performance.py:9-74). */
   def dailyAirlinePerformance(fact: DataFrame, dimDate: DataFrame,
       dimAirline: DataFrame): DataFrame = {

@@ -14,8 +14,9 @@ import Expectations._
   * the suites run where the flight suites do — as pipeline gates.
   *
   * Same scale property as FlightSuites: each suite compiles into ONE
-  * aggregation pass over its table (plus free driver-side schema
-  * checks) — a 100 TB corpus audit costs one scan.
+  * aggregation query over its table (plus free driver-side schema
+  * checks) — a 100 TB corpus audit scans the corpus once, in the few
+  * Spark jobs Expectations documents.
   *
   * Thresholds are sized for the synthetic corpus; production callers
   * tune the `mostly` knobs (e.g. lang coverage on a real crawl).

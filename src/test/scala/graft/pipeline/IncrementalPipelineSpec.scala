@@ -3,8 +3,13 @@ package graft.pipeline
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, TimestampType}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.SparkSpec
 import graft.cli.{RunPipeline, RunValidations}
 import graft.core.ParquetTable
@@ -191,5 +196,78 @@ class IncrementalPipelineSpec extends SparkSpec {
     assert(report.contains("**FAIL** | between(SPEED_KM_H"))
     val written = RunValidations.writeReport(results, wh)
     assert(java.nio.file.Files.readString(written) === report)
+  }
+
+  /** Counts scans of `silver/flights` in every executed query plan —
+    * AQE stages and broadcast sides included.
+    */
+  private final class SilverScans extends QueryExecutionListener
+      with AdaptiveSparkPlanHelper {
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var markerSeen = false
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit =
+      if (qe.analyzed.output.exists(_.name == "__scan_marker")) markerSeen = true
+      else scans.addAndGet(collectWithSubqueries(qe.executedPlan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths
+            .exists(_.toString.endsWith("/silver/flights")) => s
+      }.size)
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+  }
+
+  private def silverScans(body: => Unit): Int = {
+    val listener = new SilverScans
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive asynchronously but in order: once the
+      // marker query's event is in, every measured query's is too
+      spark.range(1).toDF("__scan_marker").collect()
+      eventually(timeout(30.seconds), interval(50.millis)) {
+        assert(listener.markerSeen)
+      }
+      listener.scans.get
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("gold and the fold scan silver once per dim, not once per dim join") {
+    val wh = tmp.resolve("wh_scans").toString
+    RunPipeline.runBronze(spark, jan, airports, carriers, wh)
+    RunPipeline.runSilver(spark, wh)
+    // dim_airline and dim_route scan silver once each, dim_airport
+    // twice (origin and destination sides), the fact build once. Fact
+    // or marts joining a lazy silver-derived dim instead of the written
+    // gold/dim_* table would add a scan per join.
+    val gold = silverScans(RunPipeline.runGold(spark, wh))
+    assert(gold === 5, s"runGold scanned silver $gold times")
+    // the fold adds the merge's existing-key scan
+    val fold = silverScans(Incremental.run(spark, wh, feb, airports, carriers))
+    assert(fold === 6, s"Incremental.run scanned silver $fold times")
+  }
+
+  test("every gold table equals a serial in-memory build from silver") {
+    val wh = tmp.resolve("wh_ref").toString
+    RunPipeline.runBronze(spark, jan, airports, carriers, wh)
+    RunPipeline.runSilver(spark, wh)
+    RunPipeline.runGold(spark, wh)
+    def check(phase: String): Unit = {
+      val silver = ParquetTable.read(spark, s"$wh/silver/flights")
+      val dims = GoldDims.Tables(GoldDims.dimDate(spark),
+        GoldDims.dimTime(spark), GoldDims.dimAirline(silver),
+        GoldDims.dimAirport(silver), GoldDims.dimRoute(silver))
+      val fact = FactFlights.build(silver, dims.date, dims.airport,
+        dims.airline, dims.route)
+      val reference = Seq("dim_date" -> dims.date, "dim_time" -> dims.time,
+        "dim_airline" -> dims.airline, "dim_airport" -> dims.airport,
+        "dim_route" -> dims.route, "fact_flights" -> fact) ++
+        Marts.all(fact, dims).map { case (n, mart, _) => n -> mart }
+      for ((t, ref) <- reference)
+        assert(canon(ParquetTable.read(spark, s"$wh/gold/$t")) === canon(ref),
+          s"$phase: gold/$t differs from the serial build")
+    }
+    check("build")
+    Incremental.run(spark, wh, feb, airports, carriers)
+    check("fold")
   }
 }
